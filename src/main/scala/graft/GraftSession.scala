@@ -112,29 +112,4 @@ object GraftSession {
       case None => spark.conf.unset(key)
     }
   }
-
-  /** Scoped AQE off for DRIVER-SEQUENCED loops over knob-bounded
-    * frames (round 17, guide §1.2 step 3 after steps 1-2 landed): a
-    * narrowing pass moves ~5 KB through its one exchange, but under
-    * AQE each pass pays query-stage materialization (broadcast stage +
-    * shuffle stage + result stage — three scheduled jobs where one
-    * suffices) and per-stage re-planning; graft.Profile measured the
-    * quantile family spending ~40% of wall in that driver gap. Inside
-    * the scope the pass plans once and runs once. Results are exact
-    * integer/rank arithmetic — plan-shape-independent by construction
-    * (QuantilesSpec pins both rank-location paths bit-equal). Confined
-    * to eager actions inside the scope; the conf is restored before
-    * any lazy plan is handed back, so callers' queries keep AQE
-    * (coalescing, skew splits) untouched.
-    */
-  def withAdaptiveOff[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.adaptive.enabled"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
 }

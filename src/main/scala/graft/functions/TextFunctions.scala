@@ -30,11 +30,6 @@ object TextFunctions {
   def nAlnumChars(text: Column): Column =
     length(regexp_replace(text, "[^A-Za-z0-9]", "")).cast("long")
 
-  /** Punctuation ratio: fraction of chars that are not alnum/space. */
-  def punctRatio(text: Column): Column =
-    (length(text) - length(regexp_replace(text, "[^A-Za-z0-9 ]", ""))).cast("double") /
-      length(text).cast("double")
-
   val stopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is")
 
   /** Stopword hits among word tokens. */
@@ -127,11 +122,6 @@ object TextFunctions {
     "en" -> Seq("the", "a", "and", "of", "to"),
     "de" -> Seq("der", "die", "das", "und", "nicht"),
     "es" -> Seq("el", "la", "los", "que", "y"))
-
-  def langScore(text: Column, lang: String): Column = {
-    val sw = array(langMarkers(lang).map(lit): _*)
-    size(filter(words(lower(text)), w => array_contains(sw, w))).cast("long")
-  }
 
   def langId(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.load(spark, dir, "documents")

@@ -617,12 +617,8 @@ object Dedup {
     * 60-bit shingle-hash sets for the candidate docs only, merged by
     * the native `graft_jaccard` expression — O(|candidates|·doclen),
     * never the Σdf² of a shingle self-join.
-    */
-  /** Probe-only alias of [[verifyJaccard]] (ProbeOph stage timing). */
-  private[graft] def verifyJaccardProbe(sh: DataFrame, cand: DataFrame,
-      threshold: Double): DataFrame = verifyJaccard(sh, cand, threshold)
-
-  /** `sh` carries pre-hashed 60-bit shingle ids: (doc_id, h: long).
+    *
+    * `sh` carries pre-hashed 60-bit shingle ids: (doc_id, h: long).
     * Long rows cache AND shuffle ~3x smaller than the md5 hex strings
     * the callers used to carry — at the 1000x soak the billion-row
     * hex-string shingle cache starved the execution pool

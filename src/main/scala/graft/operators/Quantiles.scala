@@ -1,11 +1,16 @@
 package graft.operators
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.SortableDoubleBits
 import graft.sources.Tables
@@ -15,70 +20,65 @@ import graft.sources.Tables
   * Why: the r10 skew soak measured the boundary of the classic exact
   * median (`percentile`, a per-group count-map buffer): a Zipf hot key
   * with ~40M distinct values completes at 1000x on a 48 GB heap at
-  * 1.52x the GK sketch — and graft.MedianEdge then measured the next
-  * step directly: 50M distinct values on one key is FATAL (OOM) in the
-  * 4 GB heap a normal executor gets (docs/SCALING.md round 11). The
+  * 1.52x the GK sketch, and 50M distinct values on one key was then
+  * measured FATAL (OOM) in the 4 GB heap a normal executor gets
+  * (docs/SCALING.md rounds 11–12, a historical measurement). The
   * usual answer is "switch to the sketch", which gives up exactness.
   * This operator keeps exactness at ANY group cardinality by
   * binary-searching the VALUE DOMAIN of the oversized groups instead
-  * of buffering their values:
+  * of buffering their values. The unweighted and the weighted exact
+  * operators share ONE narrowing core over weight ranks — unweighted
+  * is unit weight:
   *
-  *  1. One algebraic pass counts rows and brackets min/max per key
-  *     (partial aggregation makes this skew-immune — measured).
+  *  1. One algebraic pass counts rows per key (partial aggregation
+  *     makes this skew-immune — measured).
   *  2. Keys at or under `hotThreshold` rows take the classic exact
-  *     percentile; their buffer is bounded by the THRESHOLD — a knob —
-  *     not by the data.
-  *  3. For each oversized ("hot") key — by construction a handful; a
-  *     corpus where millions of keys exceed the threshold has no skew
-  *     problem to survive — each requested quantile's order-statistic
-  *     ranks are located by iterated histogram refinement over the
-  *     ORDER-PRESERVING BIT IMAGE of the value
-  *     ([[graft.functions.SortableDoubleBits]]): each pass buckets the
-  *     (key, quantile) pair's current [lo, hi] bit interval into
-  *     `buckets` integer-exact sub-ranges, counts rows per bucket — an
-  *     algebraic aggregation whose state is O(buckets) per pair — and
-  *     narrows to the bucket holding the target ranks. Integer
-  *     interval arithmetic means the histogram a pass counts and the
-  *     range the next pass narrows to can never disagree (float bucket
-  *     edges can misplace boundary values); the interval shrinks by
-  *     ~the bucket count per pass, so ≤ ⌈64 / log2(buckets)⌉ + 1
+  *     plan (count-map percentile, or the weighted cumsum replay);
+  *     its buffer is bounded by the THRESHOLD — a knob — not by the
+  *     data.
+  *  3. Each oversized ("hot") key's rows are extracted once, and each
+  *     requested (key, p) pair needs the elements at weight ranks k1
+  *     and k2 of the key's weight-expanded multiset: unweighted
+  *     k1 = ⌊p(n−1)⌋+1, k2 = ⌈p(n−1)⌉+1 interpolated by the fraction;
+  *     weighted k1 = k2 = max(1, ⌈p·W⌉). The ranks are located by
+  *     iterated histogram refinement over the ORDER-PRESERVING BIT
+  *     IMAGE of the value ([[graft.functions.SortableDoubleBits]]):
+  *     each pass buckets the pair's current [lo, hi] bit interval into
+  *     `buckets` integer-exact sub-ranges, sums (weight, rows) per
+  *     bucket — O(buckets) state per pair — and narrows to the bucket
+  *     where the cumulative weight reaches the ranks. Integer interval
+  *     arithmetic means the histogram a pass counts and the range the
+  *     next pass narrows to can never disagree; the interval shrinks
+  *     by ~the bucket count per pass, so ≤ ⌈64 / log2(buckets)⌉ + 1
   *     passes cover the whole double domain. ALL requested quantiles
-  *     of ALL hot keys narrow inside the SAME per-pass job — asking
-  *     for p50/p90/p99 costs one shared scan per pass, not three.
-  *  4. Three exact endgames per (key, quantile): a single-bit-value
-  *     interval IS the answer (plateau); ranks k1 ≠ k2 falling in
-  *     different buckets means the quantile straddles a bucket edge
-  *     whose below-count is exactly k1, so one conditional max/min
-  *     pass yields both order statistics; otherwise once the interval
-  *     holds ≤ `finish` rows they are collected and the ranks read
-  *     off directly.
+  *     of ALL hot keys narrow inside the SAME per-pass job.
+  *  4. Three exact endgames per pair: a single-bit-value interval IS
+  *     the answer (plateau); ranks k1 ≠ k2 falling in different
+  *     buckets mean the quantile straddles a bucket edge with exactly
+  *     k1 weight at or below it, so the nearest row on each side holds
+  *     the two elements; otherwise once the interval holds ≤ `finish`
+  *     rows they are collected and walked to the ranks.
   *
   * Cost shape: 1 full pass for counts, 1 full pass that EXTRACTS the
   * hot keys' rows into a DISK_ONLY persisted subset (at Zipf(1.1) a
-  * minority of the corpus — the passes must not re-scan 100 TB to
-  * reach 7% of it), then (passes + 1) jobs over that subset shared by
-  * every requested quantile; with the default `finish` the pass count
-  * is usually 1-2 — narrowing runs only until the candidate interval
-  * fits one bounded collect, not until it pinpoints the value. Hot
-  * results resolve EAGERLY (at most `maxHotKeys`·|ps| driver rows)
-  * and the subset is unpersisted before returning, so the returned
-  * lazy plan is just the small-key percentile plus a literal
-  * hot-result table — one more full pass when the caller consumes it.
-  * Executor memory per (key, quantile) is
+  * minority of the corpus), then per narrowing pass ONE raw RDD job
+  * over that subset's cached scan, and at most one endgame job. With
+  * the default `finish` the pass count is usually 1-2. Hot results
+  * resolve EAGERLY and the subset is unpersisted before returning, so
+  * the returned lazy plan is just the small-key plan plus a literal
+  * hot-result table. Executor memory per pair is
   * O(max(hotThreshold, finish, buckets)) — all knobs, none scaling
-  * with the data; driver traffic per pass is O(hotKeys·|ps|) rows
-  * (rank location runs in a per-pair window on the executors, only
-  * the chosen bucket edges come back).
+  * with the data; no task and not the driver ever holds more than
+  * `CellBound` histogram cells.
   *
-  * Numerics: quantiles interpolate as v1 + (v2−v1)·frac over the
-  * order statistics at ⌊p(n−1)⌋+1 and ⌈p(n−1)⌉+1 — the same rule
-  * Spark's `percentile` and DuckDB's `quantile_cont` apply, with the
-  * rank position computed in double like both engines. NaN and null
-  * values are excluded (DuckDB semantics; Spark's `percentile` sorts
-  * NaN last instead — don't feed NaN to either and expect
-  * cross-engine agreement). −0.0 orders just below +0.0 in bit space;
-  * both compare numerically equal, so any selected order statistic is
-  * numerically correct.
+  * Numerics: unweighted quantiles interpolate as v1 + (v2−v1)·frac —
+  * the rule Spark's `percentile` and DuckDB's `quantile_cont` apply,
+  * with the rank position computed in double like both engines. NaN
+  * and null values are excluded (DuckDB semantics; Spark's
+  * `percentile` sorts NaN last instead — don't feed NaN to either and
+  * expect cross-engine agreement). −0.0 orders just below +0.0 in bit
+  * space; both compare numerically equal, so any selected order
+  * statistic is numerically correct.
   *
   * This extends the engine's own exact-median operator (`q_median`,
   * [[graft.operators.Analytics.medianPricePerPriority]]) past the
@@ -89,34 +89,35 @@ import graft.sources.Tables
   */
 object Quantiles {
 
-  /** One-job histogram pass over the hot subset's cached scan (round
-    * 17 second pass): per-partition long-array fold, then combine.
-    * The seqOp mutates its task-local array in place; `size` longs of
-    * state per task — a function of the knobs (|active|·(buckets+2)
-    * cells), never of the data. Below the size bound the per-task
-    * arrays come straight back to the driver (ONE single-stage job,
-    * zero shuffle); above it a depth-2 treeAggregate caps driver
-    * traffic at ~sqrt(partitions) arrays for one tiny extra stage.
+  /** Most (pair, bucket) histogram cells a narrowing pass lets one
+    * task, one reduce partition or the driver hold. Under it a pass is
+    * one single-stage dense fold whose merged array the driver scans;
+    * above it cells combine sparsely and the same edge scan runs on
+    * the executors, one band of pairs per reduce partition.
     */
-  private def histAggregate(
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      size: Int)(
-      seq: (Array[Long], org.apache.spark.sql.catalyst.InternalRow) => Unit)
-      : Array[Long] = {
+  private val CellBound = 1 << 20
+
+  /** One-job histogram pass over the hot subset's cached scan:
+    * per-partition long-array fold, then combine. `size` longs of
+    * state per task — a function of the knobs, never of the data.
+    * Below 2^16 longs the per-task arrays come straight back to the
+    * driver (ONE single-stage job, zero shuffle); above it a depth-2
+    * tree reduce caps driver traffic at ~sqrt(partitions) arrays for
+    * one tiny extra stage.
+    */
+  private def histAggregate(rdd: RDD[InternalRow], size: Int)(
+      fold: (Array[Long], InternalRow) => Unit): Array[Long] = {
     val comb = (a: Array[Long], b: Array[Long]) => {
       var i = 0
       while (i < a.length) { a(i) += b(i); i += 1 }
       a
     }
-    if (size <= (1 << 16))
-      rdd.mapPartitions { it =>
-        val h = new Array[Long](size)
-        it.foreach(seq(h, _))
-        Iterator.single(h)
-      }.reduce(comb)
-    else
-      rdd.treeAggregate(new Array[Long](size))(
-        (h, r) => { seq(h, r); h }, comb, depth = 2)
+    val parts = rdd.mapPartitions { it =>
+      val h = new Array[Long](size)
+      it.foreach(fold(h, _))
+      Iterator.single(h)
+    }
+    if (size <= (1 << 16)) parts.reduce(comb) else parts.treeReduce(comb, depth = 2)
   }
 
   /** How [[auto]] computes its quantiles. `Exact` routes per key from
@@ -150,19 +151,16 @@ object Quantiles {
     *    scan-equivalent rows spread over the cluster — both sides
     *    computable from pass-0 counts alone. Constants calibrated on
     *    the two measured regimes (γ = 16 reproduces both verdicts with
-    *    ~20x margin each way).
+    *    ~20x margin each way). `hotThreshold = Long.MaxValue` sends
+    *    every key to the replay.
     *  - `Narrow`: every oversized key narrows (the round-12 behavior;
     *    gate surfaces pin this so the narrowing machinery stays
     *    exercised).
-    *  - `SortReplay`: never narrow — every key takes the windowed
-    *    cumsum replay (the single-host default when the caller knows
-    *    the regime).
     */
   sealed trait HotRoute
   object HotRoute {
     case object CostAware extends HotRoute
     case object Narrow extends HotRoute
-    case object SortReplay extends HotRoute
   }
 
   /** One front door for per-key quantiles at any scale — the router
@@ -176,8 +174,9 @@ object Quantiles {
     *    count-map whose buffer the threshold caps. No knob changes
     *    needed across scale: the default threshold keeps the classic
     *    buffer executor-sized and the narrowing path has no
-    *    data-scaling state (measured surviving 50M+ distinct values
-    *    on one key in a 4 GiB JVM — graft.MedianEdge `auto` leg).
+    *    data-scaling state (50M+ distinct values on one key were
+    *    measured surviving in a 4 GiB JVM, docs/SCALING.md rounds
+    *    11–12).
     *  - `mode = Sketch(acc)`: `percentile_approx` per key — one pass,
     *    mergeable, bounded rank error; for when the caller asks for
     *    an estimate, never chosen implicitly.
@@ -206,11 +205,7 @@ object Quantiles {
       exactWeightedQuantilesAnyScale(rows, key, value, w, ps,
         hotThreshold, buckets, finish, maxHotKeys, route)
     case (QuantileMode.Sketch(acc), None) =>
-      require(ps.nonEmpty && ps.distinct.size == ps.size &&
-        ps.forall(p => p >= 0.0 && p <= 1.0),
-        s"ps must be distinct quantiles in [0, 1], got $ps")
-      require(key != "p" && key != "quantile",
-        s"key column '$key' collides with the fixed output columns")
+      checkOutput(key, ps)
       val psLit = lit(ps.toArray)
       rows.filter(col(value).isNotNull && !isnan(col(value).cast("double")))
         .groupBy(col(key).as("__k"))
@@ -228,26 +223,30 @@ object Quantiles {
       approxWeightedQuantiles(rows, key, value, w, ps, ident, sampleK = acc)
   }
 
-  /** Driver-side narrowing state for one (hot key, quantile): the
-    * interpolated quantile at `p` needs order statistics
-    * k1 = ⌊p(n−1)⌋+1 and k2 = ⌈p(n−1)⌉+1 (1-based) combined as
-    * v1 + (v2−v1)·frac.
-    */
-  private final class HotState(
-      val sid: Int, val key: Any, val n: Long, val p: Double,
-      var lo: Long, var hi: Long) {
-    private val pos: Double = p * (n - 1)
-    val k1: Long = math.floor(pos).toLong + 1
-    val k2: Long = math.ceil(pos).toLong + 1
-    val frac: Double = pos - math.floor(pos)
-    var below: Long = 0L // rows with bits < lo (bit order, exact)
-    var inCount: Long = n // rows with lo <= bits <= hi
-    var straddleCut: Option[Long] = None // bit edge with exactly k1 rows <= it
-    var result: Option[Double] = None
-    def open(finishAt: Long): Boolean =
-      result.isEmpty && straddleCut.isEmpty &&
-        (lo != hi) && inCount > finishAt
+  private def checkOutput(key: String, ps: Seq[Double]): Unit = {
+    require(ps.nonEmpty && ps.distinct.size == ps.size &&
+      ps.forall(p => p >= 0.0 && p <= 1.0),
+      s"ps must be distinct quantiles in [0, 1], got $ps")
+    require(key != "p" && key != "quantile",
+      s"key column '$key' collides with the fixed output columns " +
+        "(key, p, quantile) — alias it before calling")
   }
+
+  private def checkKnobs(hotThreshold: Long, buckets: Int, finish: Long,
+      maxHotKeys: Int): Unit = {
+    require(buckets >= 2 && buckets <= CellBound - 2,
+      s"buckets=$buckets must lie in [2, ${CellBound - 2}]")
+    require(hotThreshold >= 1 && maxHotKeys >= 1,
+      s"bad knobs: hotThreshold=$hotThreshold maxHotKeys=$maxHotKeys")
+    require(finish >= 1 && finish <= 100000000L,
+      s"finish=$finish must fit a collected per-key array")
+  }
+
+  private def checkHotCount(n: Int, hotThreshold: Long, maxHotKeys: Int): Unit =
+    require(n <= maxHotKeys,
+      s"$n keys exceed hotThreshold=$hotThreshold (cap $maxHotKeys); " +
+        "raise the threshold — a workload where this many keys are oversized " +
+        "is big everywhere, not skewed")
 
   /** Exact median of `value` per `key`, any group size — the p = 0.5
     * case of [[exactQuantileAnyScale]], returned as (`key`, `median`).
@@ -290,10 +289,8 @@ object Quantiles {
     *   passes).
     * @param finish collect-and-select once a pair's candidate interval
     *   holds at most this many rows.
-    * @param maxHotKeys guard on the driver-side state (and on the
-    *   per-pass histogram, ≤ maxHotKeys·|ps|·(buckets+2) rows): more
-    *   hot keys than this fails fast with advice to raise the
-    *   threshold.
+    * @param maxHotKeys guard on the driver-side state: more hot keys
+    *   than this fails fast with advice to raise the threshold.
     * @return one row per (distinct key, p): (`key` as named,
     *   `p` double, `quantile` double), nulls/NaNs in `value` ignored;
     *   groups with no remaining rows are absent. `key` must not be
@@ -313,352 +310,63 @@ object Quantiles {
       hotThreshold: Long = 4000000L,
       buckets: Int = 8192,
       finish: Long = 1048576L,
-      maxHotKeys: Int = 4096,
-      histCollectMax: Long = 1L << 20): DataFrame = {
-    require(ps.nonEmpty && ps.distinct.size == ps.size &&
-      ps.forall(p => p >= 0.0 && p <= 1.0),
-      s"ps must be distinct quantiles in [0, 1], got $ps")
-    require(buckets >= 2, s"need at least 2 buckets, got $buckets")
-    require(hotThreshold >= 1 && maxHotKeys >= 1,
-      s"bad knobs: hotThreshold=$hotThreshold maxHotKeys=$maxHotKeys")
-    require(finish >= 1 && finish <= 100000000L,
-      s"finish=$finish must fit a collected per-key array")
-    require(key != "p" && key != "quantile",
-      s"key column '$key' collides with the fixed output columns " +
-        "(key, p, quantile) — alias it before calling")
-    val spark = rows.sparkSession
-
+      maxHotKeys: Int = 4096): DataFrame = {
+    checkOutput(key, ps)
+    checkKnobs(hotThreshold, buckets, finish, maxHotKeys)
     val v = col(value).cast("double")
     val base = rows
       .filter(col(value).isNotNull && !isnan(v))
-      .select(col(key).as("__k"), v.as("__v"))
-    val keyField = StructField("__k", base.schema("__k").dataType, nullable = true)
+      .select(col(key).as("__k"), v.as("__v"), lit(1L).as("__w"))
 
     // pass 0: count + value bracket per key (algebraic, skew-immune);
     // the bracket converts to bit space on the driver, so the full
     // corpus never evaluates the bit expression — only hot rows do
-    val counts = base.groupBy(col("__k")).agg(
-      count(lit(1)).as("__n"), min(col("__v")).as("__lo"), max(col("__v")).as("__hi"))
-    val hot = counts.filter(col("__n") > hotThreshold).collect()
-    require(hot.length <= maxHotKeys,
-      s"${hot.length} keys exceed hotThreshold=$hotThreshold (cap $maxHotKeys); " +
-        "raise the threshold — a workload where this many keys are oversized " +
-        "is big everywhere, not skewed")
+    val hot = base.groupBy(col("__k"))
+      .agg(count(lit(1)).as("__n"), min(col("__v")).as("__lo"),
+        max(col("__v")).as("__hi"))
+      .filter(col("__n") > hotThreshold).collect()
+    checkHotCount(hot.length, hotThreshold, maxHotKeys)
+    val hotKeys = hot.map(_.get(0))
 
     // small path: classic count-map percentile, all ps in one buffer
-    def finishKeys(df: DataFrame): DataFrame =
-      df.select(col("__k").as(key), col("__p").as("p"),
-        col("__med").as("quantile"))
     val psLit = lit(ps.toArray)
-
-    // joins against driver-built key tables are NULL-SAFE (`<=>`): the
-    // null surrogate is the canonical hot key, and an equality join
-    // would silently route a hot null group back to the unbounded
-    // count-map path
-    def hotJoin(left: DataFrame, right: DataFrame, how: String): DataFrame = {
-      val r = broadcast(right.withColumnRenamed("__k", "__hk"))
-      val j = left.join(r, col("__k") <=> col("__hk"), how)
-      if (how == "inner") j.drop("__hk") else j
-    }
-
-    val hotKeysDf = spark.createDataFrame(
-      hot.map(r => Row(r.get(0))).toSeq.asJava, StructType(Seq(keyField)))
-
-    val smallQuantiles = (if (hot.isEmpty) base
-      else hotJoin(base, hotKeysDf, "left_anti"))
+    val small = smallKeys(base, hotKeys)
       .groupBy(col("__k"))
       .agg(percentile(col("__v"), psLit).as("__qs"))
       .select(col("__k"), posexplode(col("__qs")).as(Seq("__pi", "__med")))
-      .withColumn("__p", element_at(psLit, col("__pi") + 1))
-    if (hot.isEmpty) return finishKeys(smallQuantiles)
-
-    // one extraction pass; every narrowing pass then reads the (small)
-    // hot subset, not the full fact. DISK_ONLY: predictable, no
-    // executor-memory claim beyond the write buffers. (An A/B against
-    // localCheckpoint showed no driver-gap win — the per-pass planning
-    // cost is job-submission latency, not lineage re-optimization —
-    // and the eager checkpoint's separate materialization job cost
-    // more than the persist's pipelined first-pass fill.) The subset
-    // rows carry a dense key index (__ki) so the endgames key on an
-    // int and the narrowing passes can run as raw RDD jobs over the
-    // cached scan (round 17 second pass, guide §1.2 step 1): the pass
-    // geometry travels in the task closure, making each pass ONE
-    // single-stage job with zero planning, zero broadcast build and
-    // zero exchange — the per-pass Catalyst cycle (analyze + optimize
-    // + codegen + broadcast + 2-stage shuffle) was the family's
-    // residual ~1 s driver gap after the round-17 collect fusion.
-    val hotIdxDf = spark.createDataFrame(
-      hot.zipWithIndex.map { case (r, ki) => Row(r.get(0), ki) }.toSeq.asJava,
-      StructType(Seq(keyField.copy(name = "__hk"),
-        StructField("__ki", IntegerType))))
-    val hotRows = base
-      .join(broadcast(hotIdxDf), col("__k") <=> col("__hk"), "inner")
-      .select(col("__ki"), col("__v"),
-        SortableDoubleBits.sortableBits(col("__v")).as("__b"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    // fixed physical scan over the persisted subset — planned ONCE;
-    // each narrowing pass re-runs only its tasks against the cache
-    val hotScan = hotRows.queryExecution.toRdd
-    val states = hot.zipWithIndex.flatMap { case (r, ki) =>
-      // min/max may report either of ±0.0 (they compare equal as
-      // doubles); widen the bit bracket to cover both so no row can
-      // fall outside it
-      val loV = r.getDouble(2)
-      val hiV = r.getDouble(3)
-      val loB = SortableDoubleBits.toSortable(if (loV == 0.0) -0.0 else loV)
-      val hiB = SortableDoubleBits.toSortable(if (hiV == 0.0) 0.0 else hiV)
-      ps.zipWithIndex.map { case (p, pi) =>
-        new HotState(ki * ps.size + pi, r.get(0), r.getLong(1), p, loB, hiB)
+      .select(col("__k"), element_at(psLit, col("__pi") + 1).as("__p"),
+        col("__med"))
+    withHotKeys(key, base, small, hotKeys, ps, weighted = false,
+      buckets, finish) { _ =>
+      hot.map { r =>
+        // min/max may report either of ±0.0 (they compare equal as
+        // doubles); widen the bit bracket to cover both so no row can
+        // fall outside it
+        val loV = r.getDouble(2)
+        val hiV = r.getDouble(3)
+        HotKey(r.getLong(1), r.getLong(1),
+          SortableDoubleBits.toSortable(if (loV == 0.0) -0.0 else loV),
+          SortableDoubleBits.toSortable(if (hiV == 0.0) 0.0 else hiV))
       }
     }
-
-    // interval shrinks ~buckets-fold per pass (half that on the one
-    // possible mixed-sign shifted pass); this bound is generous
-    val maxIter = 66 / (63 - java.lang.Long.numberOfLeadingZeros(buckets.toLong)).toInt + 4
-    var iter = 0
-    while (states.exists(_.open(finish)) && iter < maxIter) {
-      iter += 1
-      val active = states.filter(_.open(finish))
-
-      // per-pair bucket geometry, integer-exact. A mixed-sign interval
-      // wider than Long.MaxValue would overflow (bits - lo); shifting
-      // both by one bit is order-preserving and never needed twice.
-      case class Geo(s: HotState, shift: Int, sLo: Long, sHi: Long, w: Long)
-      val geo = active.map { s =>
-        val wide = s.lo < 0 && s.hi > 0 &&
-          (BigInt(s.hi) - BigInt(s.lo)) >= BigInt(Long.MaxValue)
-        val shift = if (wide) 1 else 0
-        val sLo = s.lo >> shift
-        val sHi = s.hi >> shift
-        Geo(s, shift, sLo, sHi, (sHi - sLo) / buckets + 1)
-      }
-      // Rank location. Under `histCollectMax` (round 17 second pass,
-      // guide §1.2/§2.4): the per-pass histogram is a RAW RDD JOB over
-      // the cached subset scan — the pass geometry rides the task
-      // closure, every hot row lands in exactly one monotone bucket
-      // PER ACTIVE PAIR of its key (the slot loop fans rows out per
-      // pair — this is how every requested quantile narrows in one
-      // shared scan), and the -1 / B sentinels keep rows outside a
-      // pair's interval in its rank arithmetic, so ranks stay ABSOLUTE
-      // and nothing needs carrying between passes except the interval
-      // itself. One single-stage job per pass, zero planning, zero
-      // exchange; the driver receives ONE long array — the same
-      // integer histogram (≤ |active|·(buckets+2) cells, a function of
-      // the KNOBS, never the data) the Catalyst formulation
-      // aggregated, so narrowing is bit-identical (spec-pinned against
-      // the executor-side reduction). Above the bound the Catalyst
-      // window reduction keeps driver traffic at one row per pair,
-      // exactly as before (AQE scoped off — the exchange moves ~5 KB).
-      val nBkts = buckets + 2
-      val edges: Map[Int, (Long, Long, Long, Long)] =
-        if (active.length.toLong * nBkts <= histCollectMax) {
-          val psN = ps.size
-          val slotLo = geo.map(_.s.lo)
-          val slotHi = geo.map(_.s.hi)
-          val slotSLo = geo.map(_.sLo)
-          val slotW = geo.map(_.w)
-          val slotShift = geo.map(_.shift)
-          val slotsArr: Array[Array[Int]] = {
-            val m = Array.fill(hot.length)(
-              scala.collection.mutable.ArrayBuffer.empty[Int])
-            geo.zipWithIndex.foreach { case (g, j) => m(g.s.sid / psN) += j }
-            m.map(_.toArray)
-          }
-          val bucketsL = buckets.toLong
-          val hist = histAggregate(hotScan, active.length * nBkts) {
-            (h, row) =>
-              val slots = slotsArr(row.getInt(0))
-              val b = row.getLong(2)
-              var i = 0
-              while (i < slots.length) {
-                val j = slots(i)
-                val bkt =
-                  if (b < slotLo(j)) -1L
-                  else if (b > slotHi(j)) bucketsL
-                  else ((b >> slotShift(j)) - slotSLo(j)) / slotW(j)
-                h(j * nBkts + (bkt + 1L).toInt) += 1L
-                i += 1
-              }
-          }
-          geo.zipWithIndex.map { case (g, j) =>
-            val s = g.s
-            var cum = 0L
-            var e1: (Long, Long, Long) = null
-            var b2 = Long.MinValue
-            var idx = 0
-            while (idx < nBkts && (e1 == null || b2 == Long.MinValue)) {
-              val c = hist(j * nBkts + idx)
-              if (c != 0L) {
-                cum += c
-                val b = idx - 1L
-                if (e1 == null && cum >= s.k1) e1 = (b, cum, c)
-                if (b2 == Long.MinValue && cum >= s.k2) b2 = b
-              }
-              idx += 1
-            }
-            require(e1 != null && b2 != Long.MinValue,
-              s"pass histogram never reached ranks k1=${s.k1} k2=${s.k2} " +
-                s"(p=${s.p}) — narrowing invariant broken")
-            s.sid -> (e1._1, e1._2, e1._3, b2)
-          }.toMap
-        } else {
-          val boundsSchema = StructType(Seq(
-            StructField("__ki", IntegerType),
-            StructField("__sid", IntegerType),
-            StructField("__lo", LongType), StructField("__hi", LongType),
-            StructField("__slo", LongType), StructField("__w", LongType),
-            StructField("__shift", IntegerType),
-            StructField("__k1", LongType), StructField("__k2", LongType)))
-          val bounds = spark.createDataFrame(
-            geo.map(g => Row(g.s.sid / ps.size, g.s.sid, g.s.lo, g.s.hi,
-              g.sLo, g.w, g.shift, g.s.k1, g.s.k2)).toSeq.asJava,
-            boundsSchema)
-          val bkt = when(col("__b") < col("__lo"), lit(-1L))
-            .when(col("__b") > col("__hi"), lit(buckets.toLong))
-            .otherwise(expr(s"(shiftright(__b, __shift) - __slo) div __w"))
-          val bucketed = hotRows.join(broadcast(bounds), Seq("__ki"))
-            .withColumn("__bkt", bkt)
-            .groupBy(col("__sid"), col("__bkt"))
-            .agg(count(lit(1)).as("__c"), first(col("__k1")).as("__k1"),
-              first(col("__k2")).as("__k2"))
-          val wnd = Window.partitionBy(col("__sid")).orderBy(col("__bkt"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-          graft.GraftSession.withAdaptiveOff(spark) {
-            bucketed
-              .withColumn("__cum", sum(col("__c")).over(wnd))
-              .groupBy(col("__sid"))
-              .agg(
-                min(when(col("__cum") >= col("__k1"),
-                  struct(col("__bkt"), col("__cum"), col("__c")))).as("__e1"),
-                min(when(col("__cum") >= col("__k2"),
-                  struct(col("__bkt"), col("__cum"), col("__c")))).as("__e2"))
-              .collect()
-          }.map(r => r.getInt(0) -> (r.getStruct(1).getLong(0),
-              r.getStruct(1).getLong(1), r.getStruct(1).getLong(2),
-              r.getStruct(2).getLong(0))).toMap
-        }
-
-      geo.foreach { g =>
-        val s = g.s
-        val (b1, cum1, c1, b2) = edges(s.sid)
-        require(b1 >= 0 && b1 < buckets && b2 >= 0 && b2 < buckets,
-          s"rank left the bracketed interval (b1=$b1 b2=$b2, p=${s.p}) — " +
-            "narrowing invariant broken")
-        val mask = (1L << g.shift) - 1
-        if (b1 == b2) {
-          val bHiS = math.min(g.sHi, g.sLo + (b1 + 1) * g.w - 1)
-          s.lo = math.max(s.lo, (g.sLo + b1 * g.w) << g.shift)
-          s.hi = math.min(s.hi, (bHiS << g.shift) | mask)
-          s.below = cum1 - c1
-          s.inCount = c1
-        } else {
-          // k2 = k1 + 1 and exactly cum1 = k1 rows sit at or below the
-          // upper bit edge of bucket b1: both order statistics are one
-          // conditional-aggregate away
-          val cutS = math.min(g.sHi, g.sLo + (b1 + 1) * g.w - 1)
-          s.straddleCut = Some(math.min(s.hi, (cutS << g.shift) | mask))
-        }
-      }
-    }
-    require(!states.exists(_.open(finish)),
-      s"quantile narrowing did not converge in $maxIter passes")
-
-    // plateau endgame: a single-bit interval IS the value
-    states.filter(s => s.result.isEmpty && s.straddleCut.isEmpty && s.lo == s.hi)
-      .foreach(s => s.result = Some(SortableDoubleBits.fromSortable(s.lo)))
-
-    // the remaining endgames resolve EAGERLY (one bounded job each over
-    // the persisted subset, at most maxHotKeys·|ps| rows back), so the
-    // subset can be unpersisted and the returned plan stays lazy-cheap.
-    // Each endgame returns the two order statistics; the interpolation
-    // (v1 + (v2−v1)·frac, frac per pair) happens here on the driver.
-    val bySid = states.map(s => s.sid -> s).toMap
-    def absorb(results: Array[Row]): Unit =
-      results.foreach { r =>
-        val s = bySid(r.getInt(0))
-        if (s.result.isEmpty) {
-          val (v1, v2) = (r.getDouble(1), r.getDouble(2))
-          // equal order statistics return v1 directly: Inf + (Inf-Inf)*f
-          // would manufacture NaN where percentile/quantile_cont return Inf
-          s.result = Some(if (v1 == v2) v1 else v1 + (v2 - v1) * s.frac)
-        }
-      }
-
-    // Both endgames return (sid, v1, v2); running them as branches of
-    // ONE unioned action (round 17) lets their stages schedule inside
-    // a single job instead of two driver-sequenced ones.
-    val endgames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val straddled = states.filter(_.straddleCut.isDefined)
-    if (straddled.nonEmpty) {
-      val cuts = spark.createDataFrame(
-        straddled.map(s => Row(s.sid / ps.size, s.sid, s.straddleCut.get))
-          .toSeq.asJava,
-        StructType(Seq(StructField("__ki", IntegerType),
-          StructField("__sid", IntegerType),
-          StructField("__cut", LongType))))
-      endgames += hotRows.join(broadcast(cuts), Seq("__ki"))
-        .groupBy(col("__sid"))
-        .agg(max(when(col("__b") <= col("__cut"), col("__v"))).as("__v1"),
-          min(when(col("__b") > col("__cut"), col("__v"))).as("__v2"))
-    }
-
-    val collecting = states.filter(s =>
-      s.result.isEmpty && s.straddleCut.isEmpty)
-    if (collecting.nonEmpty) {
-      val fin = spark.createDataFrame(
-        collecting.map(s => Row(s.sid / ps.size, s.sid, s.lo, s.hi,
-          s.k1 - s.below, s.k2 - s.below)).toSeq.asJava,
-        StructType(Seq(StructField("__ki", IntegerType),
-          StructField("__sid", IntegerType),
-          StructField("__lo", LongType), StructField("__hi", LongType),
-          StructField("__r1", LongType), StructField("__r2", LongType))))
-      endgames += hotRows.join(broadcast(fin), Seq("__ki"))
-        .filter(col("__b") >= col("__lo") && col("__b") <= col("__hi"))
-        .groupBy(col("__sid"))
-        .agg(sort_array(collect_list(col("__v"))).as("__vs"),
-          first(col("__r1")).as("__r1"), first(col("__r2")).as("__r2"))
-        .select(col("__sid"),
-          element_at(col("__vs"), col("__r1").cast("int")).as("__v1"),
-          element_at(col("__vs"), col("__r2").cast("int")).as("__v2"))
-    }
-    if (endgames.nonEmpty)
-      absorb(graft.GraftSession.withAdaptiveOff(spark) {
-        endgames.reduce(_ unionByName _).collect()
-      })
-    hotRows.unpersist()
-    require(states.forall(_.result.isDefined),
-      "a hot (key, quantile) resolved no result — endgame invariant broken")
-
-    val hotQuantiles = spark.createDataFrame(
-      states.map(s => Row(s.key, s.p, s.result.get)).toSeq.asJava,
-      StructType(Seq(keyField, StructField("__p", DoubleType),
-        StructField("__med", DoubleType))))
-    finishKeys(smallQuantiles.select(col("__k"), col("__p"), col("__med"))
-      .unionByName(hotQuantiles))
   }
 
   /** Exact LOWER weighted quantiles of `value` per `key`, weighted by
-    * the integral column `weight`, any group size — the weighted twin
-    * of [[exactQuantilesAnyScale]] with the same narrowing machinery:
-    * bucket COUNTS become bucket WEIGHT SUMS and the order-statistic
-    * rank becomes a weight rank. Semantics per (key, p): the smallest
-    * value v whose cumulative weight cumw(v) = Σ weight over rows with
-    * value ≤ v reaches T = max(1, ⌈p·W⌉), W the key's total weight —
-    * at p = 0.5 exactly the classic `2·cumw ≥ W → min(value)` lower
-    * weighted median (the cumsum-replay formulation
-    * [[Analytics.weightedMedian]] computes with a per-key sort window,
-    * which this extends past the group size where that sort's task is
-    * executor-shaped).
+    * the integral column `weight`, any group size. Semantics per
+    * (key, p): the smallest value v whose cumulative weight
+    * cumw(v) = Σ weight over rows with value ≤ v reaches
+    * T = max(1, ⌈p·W⌉), W the key's total weight — at p = 0.5 exactly
+    * the classic `2·cumw ≥ W → min(value)` lower weighted median (the
+    * cumsum-replay formulation [[Analytics.weightedMedian]] computes
+    * with a per-key sort window, which this extends past the group
+    * size where that sort's task is executor-shaped).
     *
     * Groups at or under `hotThreshold` ROWS take the windowed-cumsum
     * replay directly (per-key sort bounded by the knob); oversized
-    * groups narrow the value's bit domain with O(buckets) state per
-    * (key, p) — per pass one shared scan of the extracted hot subset
-    * counts (weight sum, row count) per bucket, the target bucket is
-    * the first whose absolute cumulative weight reaches T, and the
-    * endgame walks the ≤ `finish` collected rows of the final interval
-    * executor-side (an `aggregate` fold, only (key, p, value) rows
-    * return to the driver).
+    * groups the `route` sends to narrowing run the same narrowing core
+    * as [[exactQuantilesAnyScale]] — T is the T-th element of the
+    * key's weight-expanded multiset, so the core locates weight ranks
+    * k1 = k2 = T with no interpolation.
     *
     * Contracts: `weight` must be integral-valued and positive — rows
     * with null/≤ 0 weight or null/NaN value are EXCLUDED (a zero
@@ -678,46 +386,48 @@ object Quantiles {
       buckets: Int = 8192,
       finish: Long = 1048576L,
       maxHotKeys: Int = 4096,
-      route: HotRoute = HotRoute.CostAware,
-      histCollectMax: Long = 1L << 20): DataFrame = {
-    require(ps.nonEmpty && ps.distinct.size == ps.size &&
-      ps.forall(p => p >= 0.0 && p <= 1.0),
-      s"ps must be distinct quantiles in [0, 1], got $ps")
-    require(buckets >= 2, s"need at least 2 buckets, got $buckets")
-    require(hotThreshold >= 1 && maxHotKeys >= 1,
-      s"bad knobs: hotThreshold=$hotThreshold maxHotKeys=$maxHotKeys")
-    require(finish >= 1 && finish <= 100000000L,
-      s"finish=$finish must fit a collected per-key array")
-    require(key != "p" && key != "quantile",
-      s"key column '$key' collides with the fixed output columns " +
-        "(key, p, quantile) — alias it before calling")
+      route: HotRoute = HotRoute.CostAware): DataFrame = {
+    checkOutput(key, ps)
+    checkKnobs(hotThreshold, buckets, finish, maxHotKeys)
     val spark = rows.sparkSession
-
     val v = col(value).cast("double")
     val wLong = col(weight).cast("long")
     val keep = col(value).isNotNull && !isnan(v) &&
       col(weight).isNotNull && col(weight) > 0
     val base = rows.filter(keep)
       .select(col(key).as("__k"), v.as("__v"), wLong.as("__w"))
-    val keyField = StructField("__k", base.schema("__k").dataType, nullable = true)
 
-    // classification pass: WHICH keys exceed hotThreshold (plus, for
-    // CostAware, the corpus size and the eager integral-weight check).
+    // classification pass: WHICH keys exceed hotThreshold, the corpus
+    // size for the router, and the eager integral-weight check.
     // LEAN on purpose: per-key count only — no rollup (its Expand
     // feeds the aggregation TWICE the rows, measured +50% on the
     // 600M-row decade), no value brackets (keys that narrow get exact
     // stats from their extracted subset below), and the per-key result
     // persists DISK_ONLY just long enough that the corpus total plus
     // the global integral verdict are one O(|keys|) follow-up job, not
-    // a second scan of the fact. SortReplay skips the pass entirely
-    // (zero overhead over the plain replay). The integral contract is
-    // ENFORCED, not assumed: a fractional weight would otherwise
-    // truncate silently (0 < w < 1 passes the `> 0` filter yet
-    // contributes ZERO weight after the long cast). A per-row
-    // raise_error guard was tried instead and REJECTED by measurement:
-    // inside the replay's 600M-row window pipeline it cost ~1.8x
-    // bracketed same-run wall (docs/SCALING.md round 13).
-    //
+    // a second scan of the fact. The integral contract is ENFORCED,
+    // not assumed: a fractional weight would otherwise truncate
+    // silently (0 < w < 1 passes the `> 0` filter yet contributes ZERO
+    // weight after the long cast). A per-row raise_error guard was
+    // tried instead and REJECTED by measurement: inside the replay's
+    // 600M-row window pipeline it cost ~1.8x bracketed same-run wall
+    // (docs/SCALING.md round 13).
+    val counts = rows.filter(keep)
+      .select(col(key).as("__k"), wLong.as("__w"),
+        (col(weight).cast("double") === wLong.cast("double")).as("__wint"))
+      .groupBy(col("__k")).agg(
+        count(lit(1)).as("__n"), min(col("__wint")).as("__allint"))
+      .persist(StorageLevel.DISK_ONLY)
+    val (over, global) =
+      try (counts.filter(col("__n") > hotThreshold).collect(),
+        counts.agg(sum(col("__n")), min(col("__allint"))).head())
+      finally counts.unpersist()
+    require(global.isNullAt(1) || global.getBoolean(1),
+      s"weight column '$weight' holds non-integral values — the " +
+        "weighted quantile contract is integral positive weights " +
+        "(a fractional weight would truncate silently); scale weights " +
+        "to integers before calling")
+
     // Router cost model (see [[HotRoute]]): a key narrows only when
     // its single sorted window task — n rows times a spill multiplier
     // for how far the working set overflows one task's execution-
@@ -731,28 +441,10 @@ object Quantiles {
     // overhead on a single host: the classification pass (~1.2x over
     // the oracle-best plan at the 600M decade; a cluster spreads it
     // across executors like any other scan).
-    def classify(): (Array[Row], Long) = {
-      val counts = rows.filter(keep)
-        .select(col(key).as("__k"), wLong.as("__w"),
-          (col(weight).cast("double") === wLong.cast("double")).as("__wint"))
-        .groupBy(col("__k")).agg(
-          count(lit(1)).as("__n"), min(col("__wint")).as("__allint"))
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      val over = counts.filter(col("__n") > hotThreshold).collect()
-      val global = counts.agg(sum(col("__n")), min(col("__allint"))).head()
-      counts.unpersist()
-      require(global.isNullAt(1) || global.getBoolean(1),
-        s"weight column '$weight' holds non-integral values — the " +
-          "weighted quantile contract is integral positive weights " +
-          "(a fractional weight would truncate silently); scale weights " +
-          "to integers before calling")
-      (over, if (global.isNullAt(0)) 0L else global.getLong(0))
-    }
     val hotKeys: Array[Any] = route match {
-      case HotRoute.SortReplay => Array.empty[Any]
-      case HotRoute.Narrow => classify()._1.map(_.get(0))
+      case HotRoute.Narrow => over.map(_.get(0))
       case HotRoute.CostAware =>
-        val (over, totalRows) = classify()
+        val totalRows = if (global.isNullAt(0)) 0L else global.getLong(0)
         val parallelism =
           math.max(1, spark.sparkContext.defaultParallelism).toDouble
         val taskMem =
@@ -766,22 +458,7 @@ object Quantiles {
           gamma * (totalRows + narrowPasses * n) / parallelism < n * spill
         }.map(_.get(0))
     }
-    require(hotKeys.length <= maxHotKeys,
-      s"${hotKeys.length} keys exceed hotThreshold=$hotThreshold (cap $maxHotKeys); " +
-        "raise the threshold — a workload where this many keys are oversized " +
-        "is big everywhere, not skewed")
-
-    val psLit = lit(ps.toArray)
-    def finishKeys(df: DataFrame): DataFrame =
-      df.select(col("__k").as(key), col("__p").as("p"),
-        col("__med").as("quantile"))
-    def hotJoin(left: DataFrame, right: DataFrame, how: String): DataFrame = {
-      val r = broadcast(right.withColumnRenamed("__k", "__hk"))
-      val j = left.join(r, col("__k") <=> col("__hk"), how)
-      if (how == "inner") j.drop("__hk") else j
-    }
-    val hotKeysDf = spark.createDataFrame(
-      hotKeys.map(k => Row(k)).toSeq.asJava, StructType(Seq(keyField)))
+    checkHotCount(hotKeys.length, hotThreshold, maxHotKeys)
 
     // small path: windowed cumsum replay; the RANGE default frame sums
     // through value ties, so cumw is a function of the VALUE — the
@@ -789,245 +466,360 @@ object Quantiles {
     // multiply as the hot path so both paths agree bit-for-bit.
     val wByV = Window.partitionBy(col("__k")).orderBy(col("__v"))
     val wAll = Window.partitionBy(col("__k"))
-    val smallQuantiles = (if (hotKeys.isEmpty) base
-      else hotJoin(base, hotKeysDf, "left_anti"))
+    val small = smallKeys(base, hotKeys)
       .withColumn("__cw", sum(col("__w")).over(wByV))
       .withColumn("__tw", sum(col("__w")).over(wAll))
       .select(col("__k"), col("__v"), col("__cw"), col("__tw"),
-        explode(psLit).as("__p"))
+        explode(lit(ps.toArray)).as("__p"))
       .withColumn("__t",
         greatest(lit(1L), ceil(col("__p") * col("__tw")).cast("long")))
       .filter(col("__cw") >= col("__t"))
       .groupBy(col("__k"), col("__p"))
       .agg(min(col("__v")).as("__med"))
-    if (hotKeys.isEmpty) return finishKeys(smallQuantiles)
+    // the EXACT per-key stats the narrowing needs — row count, total
+    // weight W, bit brackets — ride one cheap aggregate over the
+    // (persisted, small) extracted subset, so replay-routed runs never
+    // compute them
+    withHotKeys(key, base, small, hotKeys, ps, weighted = true,
+      buckets, finish) { hotRows =>
+      val stats = hotRows.groupBy(col("__ki")).agg(count(lit(1)),
+        sum(col("__w")), min(col("__b")), max(col("__b"))).collect()
+        .map(r => r.getInt(0) ->
+          HotKey(r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+        .toMap
+      hotKeys.indices.map(stats).toArray
+    }
+  }
 
-    // hot path: one extraction pass, then shared narrowing passes. The
-    // EXACT per-key stats the narrowing needs — row count, total
-    // weight W (the T = ⌈p·W⌉ targets), value brackets — ride one
-    // cheap aggregate over the (persisted, small) extracted subset, so
-    // they are exact even when the classification above was sampled,
-    // and replay-routed runs never compute them. As in the unweighted
-    // twin (round 17 second pass), the subset rows carry a dense key
-    // index so each narrowing pass is one raw single-stage RDD job
-    // over the cached scan — zero planning, zero exchange per pass.
-    val hotIdxDf = spark.createDataFrame(
+  /** `base` minus the hot keys. Joins against driver-built key tables
+    * are NULL-SAFE (`<=>`): the null surrogate is the canonical hot
+    * key, and an equality join would silently route a hot null group
+    * back to the unbounded small-key plan.
+    */
+  private def smallKeys(base: DataFrame, hotKeys: Array[Any]): DataFrame =
+    if (hotKeys.isEmpty) base
+    else base.join(broadcast(keyTable(base, hotKeys)),
+      col("__k") <=> col("__hk"), "left_anti")
+
+  /** (`__hk`, dense key index `__ki`) for the hot keys. */
+  private def keyTable(base: DataFrame, hotKeys: Array[Any]): DataFrame =
+    base.sparkSession.createDataFrame(
       hotKeys.zipWithIndex.map { case (k, ki) => Row(k, ki) }.toSeq.asJava,
-      StructType(Seq(keyField.copy(name = "__hk"),
+      StructType(Seq(StructField("__hk", base.schema("__k").dataType),
         StructField("__ki", IntegerType))))
-    val hotRows = base
-      .join(broadcast(hotIdxDf), col("__k") <=> col("__hk"), "inner")
-      .select(col("__ki"), col("__v"),
-        SortableDoubleBits.sortableBits(col("__v")).as("__b"), col("__w"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val hotScan = hotRows.queryExecution.toRdd
-    val hotStats = hotRows.groupBy(col("__ki")).agg(
-      count(lit(1)).as("__n"), sum(col("__w")).as("__tw"),
-      min(col("__v")).as("__lo"), max(col("__v")).as("__hi"))
-      .collect()
 
-    final class WState(val sid: Int, val key: Any, val p: Double,
-        val target: Long, var lo: Long, var hi: Long, var inRows: Long) {
-      var belowW: Long = 0L
-      var result: Option[Double] = None
-      def open(finishAt: Long): Boolean =
-        result.isEmpty && lo != hi && inRows > finishAt
+  /** A hot key's exact stats: rows, total weight, and its bit bracket. */
+  private final case class HotKey(rows: Long, weight: Long, lo: Long, hi: Long)
+
+  /** The long output (`key`, `p`, `quantile`): `small` (`__k`, `__p`,
+    * `__med`) for the keys under the threshold, plus every hot key
+    * narrowed by [[narrow]] over its extracted subset. One extraction
+    * pass; every later job reads the hot subset, not the full fact.
+    * DISK_ONLY: predictable, no executor-memory claim beyond the write
+    * buffers. (An A/B against localCheckpoint showed no driver-gap
+    * win, and the eager checkpoint's separate materialization job cost
+    * more than the persist's pipelined first-pass fill.) `stats` reads
+    * each key's [[HotKey]], indexed by `__ki`, from the caller's
+    * pass-0 counts or from the persisted (`__ki`, `__b`, `__w`)
+    * subset it is given.
+    */
+  private def withHotKeys(key: String, base: DataFrame, small: DataFrame,
+      hotKeys: Array[Any], ps: Seq[Double], weighted: Boolean,
+      buckets: Int, finish: Long)(
+      stats: DataFrame => Array[HotKey]): DataFrame = {
+    val all = if (hotKeys.isEmpty) small else {
+      val hotRows = base
+        .join(broadcast(keyTable(base, hotKeys)), col("__k") <=> col("__hk"))
+        .select(col("__ki"),
+          SortableDoubleBits.sortableBits(col("__v")).as("__b"), col("__w"))
+        .persist(StorageLevel.DISK_ONLY)
+      val results =
+        try narrow(hotRows.queryExecution.toRdd, stats(hotRows), ps,
+          weighted, buckets, finish)
+        finally hotRows.unpersist()
+      small.unionByName(base.sparkSession.createDataFrame(
+        results.indices.map(i =>
+          Row(hotKeys(i / ps.size), ps(i % ps.size), results(i))).asJava,
+        StructType(Seq(StructField("__k", base.schema("__k").dataType),
+          StructField("__p", DoubleType), StructField("__med", DoubleType)))))
     }
-    val states = hotStats.flatMap { r =>
-      val ki = r.getInt(0)
-      val loV = r.getDouble(3)
-      val hiV = r.getDouble(4)
-      val loB = SortableDoubleBits.toSortable(if (loV == 0.0) -0.0 else loV)
-      val hiB = SortableDoubleBits.toSortable(if (hiV == 0.0) 0.0 else hiV)
-      ps.zipWithIndex.map { case (p, pi) =>
-        val t = math.max(1L, math.ceil(p * r.getLong(2)).toLong)
-        new WState(ki * ps.size + pi, hotKeys(ki), p, t, loB, hiB,
-          r.getLong(1))
-      }
+    all.select(col("__k").as(key), col("__p").as("p"), col("__med").as("quantile"))
+  }
+
+  /** Narrowing state of one (hot key `ki`, p) pair: the quantile is
+    * v1 + (v2 − v1)·frac over the elements at weight ranks k1 and k2
+    * (1-based) of the key's weight-expanded multiset. Tasks receive
+    * the pairs in their closures and read each pass's geometry off
+    * them.
+    */
+  private final class Pair(val ki: Int, val k1: Long, val k2: Long,
+      val frac: Double, var lo: Long, var hi: Long, var rows: Long)
+      extends Serializable {
+    var below: Long = 0L // weight of the key's rows with bits < lo
+    var cut: Option[Long] = None // straddle: exactly k1 weight at bits <= cut
+    var result: Option[Double] = None
+    // this pass's integer-exact bucket geometry over the bit interval
+    private var shift, sLo, sHi, width = 0L
+
+    def open(finish: Long): Boolean =
+      result.isEmpty && cut.isEmpty && lo != hi && rows > finish
+
+    /** Sets this pass's geometry. A mixed-sign interval wider than
+      * Long.MaxValue would overflow (bits − lo); shifting both ends by
+      * one bit is order-preserving and never needed twice.
+      */
+    def bucketize(buckets: Int): Unit = {
+      shift = if (lo < 0 && hi > 0 &&
+        BigInt(hi) - BigInt(lo) >= BigInt(Long.MaxValue)) 1L else 0L
+      sLo = lo >> shift
+      sHi = hi >> shift
+      width = (sHi - sLo) / buckets + 1
     }
 
-    val maxIter = 66 / (63 - java.lang.Long.numberOfLeadingZeros(buckets.toLong)).toInt + 4
-    var iter = 0
-    while (states.exists(_.open(finish)) && iter < maxIter) {
-      iter += 1
-      val active = states.filter(_.open(finish))
-      case class Geo(s: WState, shift: Int, sLo: Long, sHi: Long, w: Long)
-      val geo = active.map { s =>
-        val wide = s.lo < 0 && s.hi > 0 &&
-          (BigInt(s.hi) - BigInt(s.lo)) >= BigInt(Long.MaxValue)
-        val shift = if (wide) 1 else 0
-        val sLo = s.lo >> shift
-        val sHi = s.hi >> shift
-        Geo(s, shift, sLo, sHi, (sHi - sLo) / buckets + 1)
-      }
-      // Same per-pass discipline as the unweighted loop (round 17
-      // second pass): under the bound the weighted histogram — bucket
-      // WEIGHT SUMS beside bucket counts, two longs per cell — is one
-      // raw single-stage RDD job over the cached subset scan, and the
-      // cumulative weight-rank scan runs on the driver; the sentinel
-      // buckets keep the cumulative weight ABSOLUTE (bucket -1 carries
-      // the below-interval weight), so the target weight rank needs no
-      // carrying between passes. Integer weight sums, so narrowing is
-      // bit-identical to the Catalyst executor-side reduction kept for
-      // above the bound (spec-pinned both ways).
-      val nBkts = buckets + 2
-      val edges: Map[Int, (Long, Long, Long, Long)] =
-        if (active.length.toLong * nBkts <= histCollectMax) {
-          val psN = ps.size
-          val slotLo = geo.map(_.s.lo)
-          val slotHi = geo.map(_.s.hi)
-          val slotSLo = geo.map(_.sLo)
-          val slotW = geo.map(_.w)
-          val slotShift = geo.map(_.shift)
-          val slotsArr: Array[Array[Int]] = {
-            val m = Array.fill(hotKeys.length)(
-              scala.collection.mutable.ArrayBuffer.empty[Int])
-            geo.zipWithIndex.foreach { case (g, j) => m(g.s.sid / psN) += j }
-            m.map(_.toArray)
-          }
-          val bucketsL = buckets.toLong
-          val hist = histAggregate(hotScan, active.length * nBkts * 2) {
-            (h, row) =>
-              val slots = slotsArr(row.getInt(0))
-              val b = row.getLong(2)
-              val w = row.getLong(3)
-              var i = 0
-              while (i < slots.length) {
-                val j = slots(i)
-                val bkt =
-                  if (b < slotLo(j)) -1L
-                  else if (b > slotHi(j)) bucketsL
-                  else ((b >> slotShift(j)) - slotSLo(j)) / slotW(j)
-                val off = (j * nBkts + (bkt + 1L).toInt) * 2
-                h(off) += w
-                h(off + 1) += 1L
-                i += 1
-              }
-          }
-          geo.zipWithIndex.map { case (g, j) =>
-            val s = g.s
-            var cum = 0L
-            var e: (Long, Long, Long, Long) = null
-            var idx = 0
-            while (idx < nBkts && e == null) {
-              val off = (j * nBkts + idx) * 2
-              val ws = hist(off)
-              val c = hist(off + 1)
-              if (c != 0L) {
-                cum += ws
-                if (cum >= s.target) e = (idx - 1L, cum, ws, c)
-              }
-              idx += 1
-            }
-            require(e != null,
-              s"pass histogram never reached target weight ${s.target} " +
-                s"(p=${s.p}) — narrowing invariant broken")
-            s.sid -> e
-          }.toMap
-        } else {
-          val boundsSchema = StructType(Seq(
-            StructField("__ki", IntegerType),
-            StructField("__sid", IntegerType),
-            StructField("__lo", LongType), StructField("__hi", LongType),
-            StructField("__slo", LongType), StructField("__w0", LongType),
-            StructField("__shift", IntegerType),
-            StructField("__t", LongType)))
-          val bounds = spark.createDataFrame(
-            geo.map(g => Row(g.s.sid / ps.size, g.s.sid, g.s.lo, g.s.hi,
-              g.sLo, g.w, g.shift, g.s.target)).toSeq.asJava, boundsSchema)
-          val bkt = when(col("__b") < col("__lo"), lit(-1L))
-            .when(col("__b") > col("__hi"), lit(buckets.toLong))
-            .otherwise(expr("(shiftright(__b, __shift) - __slo) div __w0"))
-          val bucketed = hotRows.join(broadcast(bounds), Seq("__ki"))
-            .withColumn("__bkt", bkt)
-            .groupBy(col("__sid"), col("__bkt"))
-            .agg(sum(col("__w")).as("__ws"), count(lit(1)).as("__c"),
-              first(col("__t")).as("__tt"))
-          val wnd = Window.partitionBy(col("__sid")).orderBy(col("__bkt"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-          graft.GraftSession.withAdaptiveOff(spark) {
-            bucketed
-              .withColumn("__cum", sum(col("__ws")).over(wnd))
-              .groupBy(col("__sid"))
-              .agg(min(when(col("__cum") >= col("__tt"),
-                struct(col("__bkt"), col("__cum"), col("__ws"), col("__c"))))
-                .as("__e"))
-              .collect()
-          }.map(r => r.getInt(0) -> (r.getStruct(1).getLong(0),
-              r.getStruct(1).getLong(1), r.getStruct(1).getLong(2),
-              r.getStruct(1).getLong(3))).toMap
+    /** The bucketing function. Rows outside [lo, hi] land in the
+      * sentinel cells 0 and buckets + 1, so cumulative weights stay
+      * ABSOLUTE ranks and nothing carries between passes except the
+      * interval itself.
+      */
+    def cell(b: Long, buckets: Int): Int =
+      if (b < lo) 0
+      else if (b > hi) buckets + 1
+      else (((b >> shift) - sLo) / width).toInt + 1
+
+    /** The upper bit edge of bucket `bkt`. */
+    def edge(bkt: Int): Long =
+      math.min(hi, (math.min(sHi, sLo + (bkt + 1) * width - 1) << shift) |
+        ((1L << shift) - 1))
+
+    def narrowTo(bkt: Int, e: Edge): Unit = {
+      hi = edge(bkt)
+      lo = math.max(lo, (sLo + bkt * width) << shift)
+      below = e.cum - e.weight
+      rows = e.rows
+    }
+  }
+
+  /** The indexes of `pairs` per key index: every pair of a key reads
+    * the same scan of its rows.
+    */
+  private def slotsByKey(pairs: Array[Pair], nKeys: Int): Array[Array[Int]] = {
+    val m = Array.fill(nKeys)(Array.newBuilder[Int])
+    pairs.zipWithIndex.foreach { case (s, j) => m(s.ki) += j }
+    m.map(_.result())
+  }
+
+  /** Where one pair's cumulative weight first reaches k1 (cell1, the
+    * cumulative weight there, that cell's weight and rows) and k2
+    * (cell2).
+    */
+  private final case class Edge(cell1: Int, cum: Long, weight: Long,
+      rows: Long, cell2: Int)
+
+  /** The rank rule, the same on the driver and on the executors: `h`
+    * holds (weight, rows) per cell of pair `s` from `off`.
+    */
+  private def edgeScan(h: Array[Long], off: Int, nCells: Int, s: Pair): Edge = {
+    var cum = 0L
+    var e: Edge = null
+    var i = 0
+    while (i < nCells) {
+      val w = h(off + 2 * i)
+      cum += w
+      if (e == null && cum >= s.k1) e = Edge(i, cum, w, h(off + 2 * i + 1), -1)
+      if (cum >= s.k2) return e.copy(cell2 = i)
+      i += 1
+    }
+    throw new IllegalStateException(s"pass histogram never reached ranks " +
+      s"k1=${s.k1} k2=${s.k2} — narrowing invariant broken")
+  }
+
+  /** One narrowing pass's rank location: an [[Edge]] per active pair,
+    * from ONE job over the hot subset's cached scan with the geometry
+    * in the task closure (zero planning per pass). Under `CellBound`
+    * the dense per-task histograms merge on the driver, which scans
+    * them; above it each task combines at most `CellBound` sparse
+    * cells at a time, a shuffle sends each band of `CellBound / nCells`
+    * pairs to one reduce partition, and the edge scan runs there —
+    * only the edges come back.
+    */
+  private def locate(hotScan: RDD[InternalRow], active: Array[Pair],
+      nKeys: Int, buckets: Int): Array[Edge] = {
+    val m = active.length
+    val n = buckets + 2
+    val slots = slotsByKey(active, nKeys)
+    if (m.toLong * n <= CellBound) {
+      val h = histAggregate(hotScan, m * n * 2) { (h, row) =>
+        val js = slots(row.getInt(0))
+        val b = row.getLong(1)
+        var i = 0
+        while (i < js.length) {
+          val off = 2 * (js(i) * n + active(js(i)).cell(b, buckets))
+          h(off) += row.getLong(2)
+          h(off + 1) += 1L
+          i += 1
         }
+      }
+      Array.tabulate(m)(j => edgeScan(h, 2 * j * n, n, active(j)))
+    } else {
+      val band = CellBound / n
+      val maxSlots = slots.map(_.length).max
+      hotScan
+        .mapPartitions { rows =>
+          // map-side combine, flushed whenever the task's sparse cells
+          // could pass CellBound; each flush ships one packed
+          // (cell, weight, rows) array per band
+          Iterator.continually {
+            val cells = mutable.LongMap.empty[Array[Long]]
+            while (rows.hasNext && cells.size + maxSlots <= CellBound) {
+              val row = rows.next()
+              val b = row.getLong(1)
+              slots(row.getInt(0)).foreach { j =>
+                val c = cells.getOrElseUpdate(
+                  j.toLong * n + active(j).cell(b, buckets), new Array[Long](2))
+                c(0) += row.getLong(2)
+                c(1) += 1L
+              }
+            }
+            val packed = mutable.LongMap.empty[mutable.ArrayBuilder.ofLong]
+            cells.foreach { case (i, c) =>
+              packed.getOrElseUpdate(i / n / band, new mutable.ArrayBuilder.ofLong)
+                .addAll(Array(i, c(0), c(1)))
+            }
+            packed.iterator.map { case (bi, a) => (bi.toInt, a.result()) }.toSeq
+          }.takeWhile(_.nonEmpty).flatten
+        }
+        .partitionBy(new HashPartitioner((m + band - 1) / band))
+        .mapPartitionsWithIndex { (bi, it) =>
+          val first = bi * band
+          val size = math.min(band, m - first)
+          val h = new Array[Long](2 * size * n)
+          it.foreach { case (_, a) =>
+            var k = 0
+            while (k < a.length) {
+              val off = 2 * (a(k) - first.toLong * n).toInt
+              h(off) += a(k + 1)
+              h(off + 1) += a(k + 2)
+              k += 3
+            }
+          }
+          Iterator.tabulate(size)(j =>
+            (first + j) -> edgeScan(h, 2 * j * n, n, active(first + j)))
+        }
+        .collect().sortBy(_._1).map(_._2)
+    }
+  }
 
-      geo.foreach { g =>
-        val s = g.s
-        val (b, cum, ws, c) = edges(s.sid)
-        require(b >= 0 && b < buckets,
-          s"weight rank left the bracketed interval (b=$b, p=${s.p}) — " +
-            "narrowing invariant broken")
-        val mask = (1L << g.shift) - 1
-        val bHiS = math.min(g.sHi, g.sLo + (b + 1) * g.w - 1)
-        s.lo = math.max(s.lo, (g.sLo + b * g.w) << g.shift)
-        s.hi = math.min(s.hi, (bHiS << g.shift) | mask)
-        s.belowW = cum - ws
-        s.inRows = c
+  /** The shared narrowing core: the value of every (hot key, p) pair,
+    * indexed ki·|ps| + pi. `hotScan` rows are (ki int, bits long,
+    * weight long). Unweighted ranks are unit-weight order statistics
+    * k1 = ⌊p(n−1)⌋+1, k2 = ⌈p(n−1)⌉+1; weighted ranks are
+    * k1 = k2 = max(1, ⌈p·W⌉), the lower weighted quantile.
+    */
+  private def narrow(hotScan: RDD[InternalRow], keys: Array[HotKey],
+      ps: Seq[Double], weighted: Boolean, buckets: Int,
+      finish: Long): Array[Double] = {
+    val pairs = keys.zipWithIndex.flatMap { case (h, ki) =>
+      ps.map { p =>
+        if (weighted) {
+          val t = math.max(1L, math.ceil(p * h.weight).toLong)
+          new Pair(ki, t, t, 0.0, h.lo, h.hi, h.rows)
+        } else {
+          val pos = p * (h.rows - 1)
+          new Pair(ki, math.floor(pos).toLong + 1, math.ceil(pos).toLong + 1,
+            pos - math.floor(pos), h.lo, h.hi, h.rows)
+        }
       }
     }
-    require(!states.exists(_.open(finish)),
-      s"weighted quantile narrowing did not converge in $maxIter passes")
+
+    // interval shrinks ~buckets-fold per pass (half that on the one
+    // possible mixed-sign shifted pass); this bound is generous
+    val maxIter = 66 / (63 - java.lang.Long.numberOfLeadingZeros(buckets.toLong)) + 4
+    var iter = 0
+    while (pairs.exists(_.open(finish)) && iter < maxIter) {
+      iter += 1
+      val active = pairs.filter(_.open(finish))
+      active.foreach(_.bucketize(buckets))
+      active.zip(locate(hotScan, active, keys.length, buckets)).foreach {
+        case (s, e) =>
+          val (b1, b2) = (e.cell1 - 1, e.cell2 - 1)
+          require(b1 >= 0 && b1 < buckets && b2 >= 0 && b2 < buckets,
+            s"rank left the bracketed interval (b1=$b1 b2=$b2) — " +
+              "narrowing invariant broken")
+          // b1 != b2: k2 = k1 + 1 and exactly k1 weight sits at or
+          // below the upper bit edge of bucket b1, so the nearest rows
+          // on each side of that edge are the two elements
+          if (b1 == b2) s.narrowTo(b1, e) else s.cut = Some(s.edge(b1))
+      }
+    }
+    require(!pairs.exists(_.open(finish)),
+      s"quantile narrowing did not converge in $maxIter passes")
 
     // plateau endgame: a single-bit interval IS the value
-    states.filter(s => s.result.isEmpty && s.lo == s.hi)
+    pairs.filter(s => s.result.isEmpty && s.cut.isEmpty && s.lo == s.hi)
       .foreach(s => s.result = Some(SortableDoubleBits.fromSortable(s.lo)))
+    endgame(hotScan, pairs.filter(_.result.isEmpty), keys.length)
+    pairs.map(_.result.getOrElse(throw new IllegalStateException(
+      "a hot (key, p) resolved no result — endgame invariant broken")))
+  }
 
-    // collect endgame: the ≤ finish interval rows fold EXECUTOR-SIDE
-    // (sorted (value, weight) walk until the absolute cumulative
-    // weight reaches the target); one (sid, value) row returns per pair
-    val collecting = states.filter(_.result.isEmpty)
-    if (collecting.nonEmpty) {
-      val fin = spark.createDataFrame(
-        collecting.map(s => Row(s.sid / ps.size, s.sid, s.lo, s.hi,
-          s.belowW, s.target)).toSeq.asJava,
-        StructType(Seq(StructField("__ki", IntegerType),
-          StructField("__sid", IntegerType),
-          StructField("__lo", LongType), StructField("__hi", LongType),
-          StructField("__bw", LongType), StructField("__t", LongType))))
-      val bySid = collecting.map(s => s.sid -> s).toMap
-      graft.GraftSession.withAdaptiveOff(spark) {
-      hotRows.join(broadcast(fin), Seq("__ki"))
-        .filter(col("__b") >= col("__lo") && col("__b") <= col("__hi"))
-        .groupBy(col("__sid"))
-        .agg(sort_array(collect_list(struct(col("__v"), col("__w"))))
-          .as("__vs"),
-          first(col("__bw")).as("__bw"), first(col("__t")).as("__t"))
-        .select(col("__sid"), expr(
-          """aggregate(__vs,
-            |  struct(__bw AS acc, CAST(NULL AS DOUBLE) AS res),
-            |  (a, x) -> CASE
-            |    WHEN a.res IS NOT NULL THEN a
-            |    WHEN a.acc + x.__w >= __t
-            |      THEN struct(a.acc + x.__w AS acc, x.__v AS res)
-            |    ELSE struct(a.acc + x.__w AS acc, CAST(NULL AS DOUBLE) AS res)
-            |  END,
-            |  a -> a.res)""".stripMargin).as("__med"))
-        .collect()
-        .foreach { r =>
-          require(!r.isNullAt(1),
-            "a hot (key, p) fold reached no target weight — endgame " +
-              "invariant broken")
-          bySid(r.getInt(0)).result = Some(r.getDouble(1))
+  /** Straddle and collect endgames in ONE job over the hot subset's
+    * cached scan. A straddle pair keeps each task's nearest bits on
+    * either side of its cut; a collect pair ships its ≤ `finish`
+    * interval rows. Per pair, the reduce side walks the sorted
+    * (bits, weight) rows from the weight below them to ranks k1 and
+    * k2 (a straddle pair's two nearest rows start at k1 − 1); the
+    * driver interpolates.
+    */
+  private def endgame(hotScan: RDD[InternalRow], ends: Array[Pair],
+      nKeys: Int): Unit = if (ends.nonEmpty) {
+    val m = ends.length
+    val slots = slotsByKey(ends, nKeys)
+    hotScan.mapPartitions { rows =>
+      // Long.MinValue / MaxValue are NaN bit images, never a row's bits
+      val lt = Array.fill(m)(Long.MinValue)
+      val gt = Array.fill(m)(Long.MaxValue)
+      rows.flatMap { row =>
+        val b = row.getLong(1)
+        slots(row.getInt(0)).flatMap { e =>
+          val s = ends(e)
+          s.cut match {
+            case Some(c) =>
+              if (b <= c) lt(e) = math.max(lt(e), b) else gt(e) = math.min(gt(e), b)
+              None
+            case None =>
+              if (b >= s.lo && b <= s.hi) Some((e, (b, row.getLong(2)))) else None
+          }
         }
+      } ++ ends.indices.iterator.filter(ends(_).cut.isDefined).flatMap(e =>
+        Iterator((e, (lt(e), 1L)), (e, (gt(e), 1L))))
+    }.groupByKey(math.max(1, math.min(m, hotScan.getNumPartitions)))
+      .map { case (e, cells) =>
+        val s = ends(e)
+        val (sorted, start) = s.cut match {
+          case Some(c) =>
+            val bs = cells.map(_._1)
+            (Seq(bs.filter(_ <= c).max, bs.filter(_ > c).min).map((_, 1L)), s.k1 - 1)
+          case None => (cells.toSeq.sortBy(_._1), s.below)
+        }
+        var acc = start
+        var (b1, b2) = (Long.MinValue, Long.MinValue)
+        sorted.foreach { case (b, w) =>
+          acc += w
+          if (b1 == Long.MinValue && acc >= s.k1) b1 = b
+          if (b2 == Long.MinValue && acc >= s.k2) b2 = b
+        }
+        (e, b1, b2)
       }
-    }
-    hotRows.unpersist()
-    require(states.forall(_.result.isDefined),
-      "a hot (key, p) resolved no result — endgame invariant broken")
-
-    val hotQuantiles = spark.createDataFrame(
-      states.map(s => Row(s.key, s.p, s.result.get)).toSeq.asJava,
-      StructType(Seq(keyField, StructField("__p", DoubleType),
-        StructField("__med", DoubleType))))
-    finishKeys(smallQuantiles.select(col("__k"), col("__p"), col("__med"))
-      .unionByName(hotQuantiles))
+      .collect()
+      .foreach { case (e, b1, b2) =>
+        require(b1 != Long.MinValue && b2 != Long.MinValue,
+          "an endgame walk reached no rank — endgame invariant broken")
+        val (v1, v2) = (SortableDoubleBits.fromSortable(b1),
+          SortableDoubleBits.fromSortable(b2))
+        // equal elements return v1 directly: Inf + (Inf-Inf)*f would
+        // manufacture NaN where percentile/quantile_cont return Inf
+        ends(e).result = Some(if (v1 == v2) v1 else v1 + (v2 - v1) * ends(e).frac)
+      }
   }
 
   /** `q_median_narrow` gate surface: the narrowing median against the
@@ -1112,15 +904,10 @@ object Quantiles {
       rows: DataFrame, key: String, value: String, weight: String,
       ps: Seq[Double], ident: Seq[String],
       sampleK: Int = 10000): DataFrame = {
-    require(ps.nonEmpty && ps.distinct.size == ps.size &&
-      ps.forall(p => p >= 0.0 && p <= 1.0),
-      s"ps must be distinct quantiles in [0, 1], got $ps")
+    checkOutput(key, ps)
     require(ident.nonEmpty, "ident columns seed the deterministic draw")
     require(sampleK >= 16 && sampleK <= 10000000,
       s"sampleK=$sampleK out of the executor-sized range")
-    require(key != "p" && key != "quantile",
-      s"key column '$key' collides with the fixed output columns " +
-        "(key, p, quantile) — alias it before calling")
     val v = col(value).cast("double")
     val wD = col(weight).cast("double")
     val keep = col(value).isNotNull && !isnan(v) &&

@@ -196,14 +196,16 @@ class QuantilesSpec extends SparkSpec {
         ("hot", hashDouble(i, 61, 1e5), 1L + (i % 5))) ++
       Seq.tabulate(40)(i => ("small", hashDouble(i, 62, 9.0), 1L + (i % 2)))
     val df = rows.toDF("k", "v", "w")
-    def run(route: Quantiles.HotRoute): Map[(String, Double), Double] =
+    def run(route: Quantiles.HotRoute,
+        hotThreshold: Long = 100): Map[(String, Double), Double] =
       Quantiles.exactWeightedQuantilesAnyScale(df, "k", "v", "w",
-        Seq(0.25, 0.9), hotThreshold = 100, buckets = 8, finish = 16,
+        Seq(0.25, 0.9), hotThreshold = hotThreshold, buckets = 8, finish = 16,
         route = route)
         .collect()
         .map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     val narrow = run(Quantiles.HotRoute.Narrow)
-    val replay = run(Quantiles.HotRoute.SortReplay)
+    // no key is over the threshold: every key takes the windowed replay
+    val replay = run(Quantiles.HotRoute.CostAware, hotThreshold = Long.MaxValue)
     val auto = run(Quantiles.HotRoute.CostAware)
     assert(narrow == replay, "routing must be semantics-preserving")
     assert(auto == narrow)
@@ -227,8 +229,8 @@ class QuantilesSpec extends SparkSpec {
   test("fractional weights fail loudly instead of truncating") {
     val df = (Seq.tabulate(20)(i => ("k1", i.toDouble, 1.0)) :+
       (("k1", 99.0, 0.5))).toDF("k", "v", "w")
-    // the check rides the row pipeline (raise_error), so it fires when
-    // any plan over the frame actually reads the violating row
+    // the check is the classification aggregate's min(__wint) verdict,
+    // read eagerly before any result is planned
     val e = intercept[Exception] {
       Quantiles.exactWeightedQuantilesAnyScale(
         df, "k", "v", "w", Seq(0.5)).collect()
@@ -309,39 +311,47 @@ class QuantilesSpec extends SparkSpec {
     }
   }
 
-  test("per-pass rank location: driver cum-scan equals the executor " +
-    "window reduction (histCollectMax both ways)") {
-    // round 17: the knob-bounded per-pass histogram collects to the
-    // driver under histCollectMax (one exchange per pass) and reduces
-    // executor-side above it — both must narrow identically, pass by
-    // pass, so the final quantiles are bit-equal.
+  test("per-pass rank location above the cell bound: the executor-side " +
+    "edge scan matches the classic percentile and the cumsum replay") {
+    // at buckets = 2^17 eight (key, p) pairs already exceed the 2^20
+    // histogram cells one pass may collect, so nine pairs take the
+    // sparse combine + banded executor edge scan (two bands)
+    val buckets = 1 << 17
     val rows = Seq.tabulate(4000)(i => ("h1", hashDouble(i, 91, 1e6))) ++
       Seq.tabulate(3001)(i => ("h2", hashDouble(i, 92, 1e3) - 500.0)) ++
+      Seq.tabulate(2000)(i => ("h3", hashDouble(i, 96, 1e9))) ++
       Seq.tabulate(40)(i => ("small", hashDouble(i, 93, 10.0)))
     val df = rows.toDF("k", "v")
     val ps = Seq(0.25, 0.5, 0.99)
-    def run(max: Long): Map[(String, Double), Double] =
-      Quantiles.exactQuantilesAnyScale(df, "k", "v", ps,
-        hotThreshold = 100, buckets = 16, finish = 8, histCollectMax = max)
-        .collect()
-        .map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
-    val driverPath = run(1L << 20)
-    val executorPath = run(0L)
-    assert(driverPath == executorPath && driverPath.size == 9)
+    val got = Quantiles.exactQuantilesAnyScale(df, "k", "v", ps,
+      hotThreshold = 100, buckets = buckets, finish = 8)
+      .collect()
+      .map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
+    val classic = df.groupBy("k")
+      .agg(percentile(col("v"), lit(ps.toArray)).as("q"))
+      .collect().flatMap(r => ps.zip(r.getSeq[Double](1))
+        .map { case (p, q) => (r.getString(0), p) -> q }).toMap
+    assert(got.keySet == classic.keySet && got.size == 12)
+    classic.foreach { case (kp, q) =>
+      assert(math.abs(got(kp) - q) <= math.max(1e-9, math.abs(q) * 1e-12),
+        s"$kp: narrowed=${got(kp)}, classic=$q")
+    }
 
     val wrows = Seq.tabulate(3000)(i =>
         ("hot", hashDouble(i, 94, 1e5), 1L + (i % 5))) ++
-      Seq.tabulate(800)(i => ("ties", (i % 7).toDouble, 2L + (i % 3)))
+      Seq.tabulate(800)(i => ("mid", hashDouble(i, 97, 50.0), 2L + (i % 3))) ++
+      Seq.tabulate(2500)(i => ("neg", -hashDouble(i, 95, 1e4), 1L + (i % 2)))
     val wdf = wrows.toDF("k", "v", "w")
-    def runW(max: Long): Map[(String, Double), Double] =
-      Quantiles.exactWeightedQuantilesAnyScale(wdf, "k", "v", "w",
-        Seq(0.5, 0.9), hotThreshold = 100, buckets = 8, finish = 16,
-        route = Quantiles.HotRoute.Narrow, histCollectMax = max)
-        .collect()
-        .map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
-    val wDriver = runW(1L << 20)
-    val wExecutor = runW(0L)
-    assert(wDriver == wExecutor && wDriver.size == 4)
+    val wps = Seq(0.25, 0.5, 0.9)
+    val wgot = Quantiles.exactWeightedQuantilesAnyScale(wdf, "k", "v", "w",
+      wps, hotThreshold = 100, buckets = buckets, finish = 16,
+      route = Quantiles.HotRoute.Narrow)
+      .collect()
+      .map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
+    val replay = wrows.groupBy(_._1).toSeq.flatMap { case (k, g) =>
+      wps.map(p => (k, p) -> referenceWeightedQ(g.map(t => (t._2, t._3)), p))
+    }.toMap
+    assert(wgot == replay && wgot.size == 9)
   }
 
   test("q_median_narrow matches the classic percentile on lineitem") {
